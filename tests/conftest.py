@@ -4,9 +4,12 @@ names, order-insensitive value equality)."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
+import types
+import uuid
 
 import duckdb
 import pytest
@@ -26,6 +29,22 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
     s = get_spark("tests")
     yield s
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs launched inside the block. They run under a
+    fresh job group, and ``statusTracker()`` lists that group's jobs on
+    exit; the yielded namespace's ``n`` holds the count afterwards."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    out = types.SimpleNamespace(n=None)
+    sc.setJobGroup(group, group)
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        out.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -6,7 +6,10 @@ snapshot backend next to the default directory-swap backend."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import types
 
 import pytest
 
@@ -15,11 +18,28 @@ from pyspark.sql import functions as F
 from website_traffic_etl_gcp_spark.sources import snapshot_table as st
 from website_traffic_etl_gcp_spark.sources import writers
 
+from .conftest import spark_jobs
+
 
 def _df(spark, lo, hi):
     return spark.range(lo, hi).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
+
+
+@contextlib.contextmanager
+def _data_dirs(monkeypatch, *names):
+    """Stage the next commits under ``data/<name>/`` in the given
+    order, so a test decides which commit's footers sort first."""
+    it = iter(names)
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            st, "uuid",
+            types.SimpleNamespace(
+                uuid4=lambda: types.SimpleNamespace(hex=next(it))
+            ),
+        )
+        yield
 
 
 def test_commit_read_overwrite_append(spark, tmp_path):
@@ -125,6 +145,20 @@ def test_wap_publish_both_backends(spark, tmp_path, backend):
         else spark.read.parquet(root)
     )
     assert read.count() == 7
+
+
+def test_wap_publish_declares_the_published_schema(spark, tmp_path):
+    """A WAP overwrite of a snapshot table declares its own schema
+    instead of inheriting the replaced version's, so a column the old
+    version lacked reads back."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 3), root)
+    wider = _df(spark, 0, 4).withColumn("z", F.lit("x"))
+    out = writers.write_audit_publish(wider, root, _rules(), backend="snapshot")
+    assert out["version"] == 2
+    head = st.read_snapshot(spark, root)
+    assert head.columns == ["k", "v", "z"]
+    assert [r["z"] for r in head.collect()] == ["x"] * 4
 
 
 @pytest.mark.parametrize("backend", ["swap", "snapshot"])
@@ -507,24 +541,98 @@ def test_schema_evolution_type_conflict_rejected(spark, tmp_path):
     assert st.read_snapshot(spark, root).count() == 3
 
 
-def test_schema_evolution_survives_maintenance_commits(spark, tmp_path):
+def test_schema_evolution_survives_maintenance_commits(
+    spark, tmp_path, monkeypatch
+):
     """Compaction and MERGE declare no schema themselves — they must
-    inherit the parent's so the evolved declaration never regresses."""
+    inherit the parent's so the evolved declaration never regresses,
+    and compaction must read through it: the evolved column keeps its
+    values whichever commit's directory sorts first (a reader taking
+    its schema from the first footer drops them when a pre-evolution
+    file comes first)."""
+    for first, second in (("0" * 16, "f" * 16), ("f" * 16, "0" * 16)):
+        root = str(tmp_path / f"t{first[0]}")
+        with _data_dirs(monkeypatch, first, second):
+            st.write_snapshot(_df(spark, 0, 4), root)
+            wide = _df(spark, 4, 6).withColumn("w", F.lit(7))
+            st.write_snapshot(wide, root, mode="append")
+
+        st.compact_snapshot(spark, root, target_file_bytes=1 << 30)
+        after = st.read_snapshot(spark, root)
+        assert after.columns == ["k", "v", "w"]
+        assert after.count() == 6
+        assert sorted((r["k"], r["w"]) for r in after.collect()) == [
+            (0, None), (1, None), (2, None), (3, None), (4, 7), (5, 7)
+        ]
+
+        src = spark.createDataFrame([(0, 111, 9)], "k long, v long, w int")
+        st.merge_snapshot(spark, root, src, ["k"])
+        merged = st.read_snapshot(spark, root)
+        assert merged.columns == ["k", "v", "w"]
+        assert merged.count() == 6
+        row = merged.filter("k = 0").collect()[0]
+        assert (row["v"], row["w"]) == (111, 9)
+
+
+def test_merge_into_file_written_after_evolution(spark, tmp_path, monkeypatch):
+    """A merge whose touched file carries a column the older files
+    lack: the merge takes the target's columns from the declaration,
+    not from whichever footer sorts first."""
     root = str(tmp_path / "t")
-    st.write_snapshot(_df(spark, 0, 4), root)
-    wide = _df(spark, 4, 6).withColumn("w", F.lit(7))
-    st.write_snapshot(wide, root, mode="append")
+    with _data_dirs(monkeypatch, "0" * 16, "f" * 16):
+        st.write_snapshot(_df(spark, 0, 4), root)
+        wide = _df(spark, 4, 6).withColumn("w", F.lit(7))
+        st.write_snapshot(wide, root, mode="append")
+    src = spark.createDataFrame([(5, 555, 9)], "k long, v long, w int")
+    res = st.merge_snapshot(spark, root, src, ["k"])
+    assert res["files_rewritten"] == 1
+    got = sorted(tuple(r) for r in st.read_snapshot(spark, root).collect())
+    want = [(k, k * 10, None) for k in range(4)] + [(4, 40, 7), (5, 555, 9)]
+    assert got == want
 
-    st.compact_snapshot(spark, root, target_file_bytes=1 << 30)
-    after = st.read_snapshot(spark, root)
-    assert after.columns == ["k", "v", "w"]
-    assert after.count() == 6
 
-    src = spark.createDataFrame([(0, 111, 9)], "k long, v long, w int")
+def test_merge_casts_source_to_declared_types(spark, tmp_path):
+    """Merge-written files match the manifest's declared types, which
+    reads trust: a ``v int`` table merged with a ``v bigint`` source
+    reads back correct ``int`` values."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(
+        spark.range(0, 4).select(
+            F.col("id").alias("k"), (F.col("id") * 10).cast("int").alias("v")
+        ),
+        root,
+    )
+    src = spark.createDataFrame([(2, 222), (9, 999)], "k long, v bigint")
     st.merge_snapshot(spark, root, src, ["k"])
-    merged = st.read_snapshot(spark, root)
-    assert merged.columns == ["k", "v", "w"]
-    assert merged.filter("k = 0").collect()[0]["v"] == 111
+    head = st.read_snapshot(spark, root)
+    assert head.dtypes == [("k", "bigint"), ("v", "int")]
+    assert sorted(tuple(r) for r in head.collect()) == [
+        (0, 0), (1, 10), (2, 222), (3, 30), (9, 999)
+    ]
+
+
+def test_merge_rejects_inexact_source_types(spark, tmp_path):
+    """A source type that does not convert exactly to the declared one
+    fails the merge instead of corrupting values: a ``double`` into
+    an ``int`` column raises before any commit, and a ``bigint`` value
+    outside the ``int`` range fails the write."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(
+        spark.range(0, 4).select(
+            F.col("id").alias("k"), (F.col("id") * 10).cast("int").alias("v")
+        ),
+        root,
+    )
+    src = spark.createDataFrame([(2, 3.7)], "k long, v double")
+    with pytest.raises(st.SchemaEvolutionError, match="'v'"):
+        st.merge_snapshot(spark, root, src, ["k"])
+    big = spark.createDataFrame([(2, 1 << 40)], "k long, v bigint")
+    with pytest.raises(Exception, match="outside declared 'int'"):
+        st.merge_snapshot(spark, root, big, ["k"])
+    assert st.current_version(root) == 1
+    assert sorted(tuple(r) for r in st.read_snapshot(spark, root).collect()) == [
+        (k, k * 10) for k in range(4)
+    ]
 
 
 def test_read_increment_across_evolution(spark, tmp_path):
@@ -648,3 +756,85 @@ def test_streaming_sink_commits_carry_zone_maps(spark, tmp_path):
     pruned, info = st.read_snapshot_pruned(spark, root, "k", 1000, 1099)
     assert info["files_total"] == 3 and info["files_read"] == 1
     assert pruned.count() == 100
+
+
+def test_building_reads_launches_no_spark_job(spark, tmp_path):
+    """With a declared schema a read needs no footer inference: the
+    frames of a full, a pruned and an empty pruned read are built
+    without a single Spark job."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 100).repartitionByRange(4, "k"), root)
+    wide = _df(spark, 100, 110).withColumn("w", F.lit(1))
+    st.write_snapshot(wide, root, mode="append")
+    with spark_jobs(spark) as jobs:
+        full = st.read_snapshot(spark, root)
+        pruned, info = st.read_snapshot_pruned(spark, root, "k", 10, 20)
+        empty, _ = st.read_snapshot_pruned(spark, root, "k", 500, 600)
+    assert jobs.n == 0
+    assert full.columns == pruned.columns == empty.columns == ["k", "v", "w"]
+    assert 0 < info["files_read"] < info["files_total"]
+    assert pruned.count() == 11 and full.count() == 110
+
+
+def test_merge_scans_only_zone_map_candidates(spark, tmp_path):
+    """A source whose keys fall inside one file's zone map scans only
+    that file; every other file is carried forward unopened and the
+    result is exact."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 1000).repartitionByRange(8, "k"), root)
+    m = st.read_manifest(root, 1)
+    lo, hi = sorted(s["k"] for s in m["stats"].values())[3]
+    src = spark.createDataFrame(
+        [(lo, -1), (hi, -2), (5000, -3)], "k long, v long"
+    )
+    res = st.merge_snapshot(spark, root, src.filter(F.col("k") <= hi), ["k"])
+    assert res["files_scanned"] == res["files_rewritten"] == 1
+    assert res["files_kept"] == 7
+    stats = st.read_manifest(root, 2)["stats"]
+    reach = sum(s["k"][1] >= lo for s in stats.values())
+    assert 0 < reach < len(stats)
+    res = st.merge_snapshot(spark, root, src, ["k"])
+    # the range [lo, 5000] reaches only the files holding keys >= lo
+    assert res["files_scanned"] == reach
+    got = sorted(tuple(r) for r in st.read_snapshot(spark, root).collect())
+    want = {k: k * 10 for k in range(1000)}
+    want.update({lo: -1, hi: -2, 5000: -3})
+    assert got == sorted(want.items())
+
+
+def test_merge_without_stats_scans_every_file(spark, tmp_path):
+    """A manifest without zone maps makes every file a merge candidate:
+    slower, never wrong."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 100).repartitionByRange(4, "k"), root)
+    m = st.read_manifest(root, 1)
+    del m["stats"]  # as written by a writer that records no zone maps
+    with open(st._manifest_path(root, 1), "w") as f:
+        json.dump(m, f)
+    src = spark.createDataFrame([(10, -1), (200, -2)], "k long, v long")
+    res = st.merge_snapshot(spark, root, src, ["k"])
+    assert res["files_scanned"] == 4
+    assert res["files_rewritten"] == 1
+    got = sorted(tuple(r) for r in st.read_snapshot(spark, root).collect())
+    want = {k: k * 10 for k in range(100)}
+    want.update({10: -1, 200: -2})
+    assert got == sorted(want.items())
+
+
+def test_merge_with_null_key_bounds_scans_nothing(spark, tmp_path):
+    """An empty or all-NULL-key source can match no row (NULL keys
+    never equi-join): no file is scanned or rewritten, and NULL-key
+    rows still insert."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 10).repartitionByRange(2, "k"), root)
+    empty = spark.createDataFrame([], "k long, v long")
+    res = st.merge_snapshot(spark, root, empty, ["k"])
+    assert (res["files_scanned"], res["files_rewritten"]) == (0, 0)
+    nulls = spark.createDataFrame([(None, 5)], "k long, v long")
+    res = st.merge_snapshot(spark, root, nulls, ["k"])
+    assert (res["files_scanned"], res["files_rewritten"]) == (0, 0)
+    got = sorted(
+        (r["k"] if r["k"] is not None else -1, r["v"])
+        for r in st.read_snapshot(spark, root).collect()
+    )
+    assert got == [(-1, 5)] + [(k, k * 10) for k in range(10)]

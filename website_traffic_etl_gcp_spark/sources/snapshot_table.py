@@ -43,6 +43,21 @@ chunks by their range summary before opening any of them, so driver
 cost is O(chunks + files-in-overlapping-chunks), sub-linear in table
 file count for selective predicates. Small tables stay on the inline
 single-JSON format — both formats are readable forever.
+
+Scans trust the manifest. Every commit declares the table schema and
+every file's zone map, so a read hands the parquet reader the
+declared schema instead of inferring one from footers (building a
+read launches no Spark job; files written before an additive
+evolution surface typed NULLs in the newer columns), and a merge
+compares the source's key range against the zone maps before it
+scans anything: only files that can hold a source key are read, the
+rest are carried forward without being opened. That skipping pays
+off when the source keys span a narrow range of a table whose files
+are clustered by key; scattered keys over hash-partitioned files
+leave every file a candidate. Every writer keeps the declaration
+true — appends reject type changes and merges convert their source
+to the declared types exactly or raise. Manifests written before
+schemas were recorded read footers as before.
 """
 
 from __future__ import annotations
@@ -53,8 +68,18 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructType,
+)
 
 _SNAP_DIR = "_snapshots"
 _LATEST = "_latest"
@@ -70,8 +95,9 @@ class CommitConflict(Exception):
 
 
 class SchemaEvolutionError(Exception):
-    """An append's schema conflicts with the table's declared schema
-    (same-name column with a different type). New columns are allowed
+    """An append's or a merge source's schema conflicts with the
+    table's declared schema (same-name column with a different type
+    that a merge cannot convert exactly). New columns are allowed
     (additive evolution, the Delta/Iceberg default); type changes are
     rejected loudly instead of silently corrupting reads."""
 
@@ -518,35 +544,52 @@ def read_snapshot(
     is resolved NOW; later commits, deletes, or pointer moves do not
     change what this frame reads."""
     m = read_manifest(root, version)
-    paths = [os.path.join(root, f) for f in manifest_files(root, m)]
-    if not paths:
+    rel = manifest_files(root, m)
+    if not rel:
         raise NoSuchSnapshot(f"version {m['version']} of {root} is empty")
-    return _read_aligned(spark, paths, m)
+    return _read_aligned(spark, root, rel, m)
 
 
-def _read_aligned(spark: SparkSession, paths: list[str], m: dict) -> DataFrame:
-    """Read ``paths`` aligned to the manifest's DECLARED schema.
-    Part-file footers written before an evolution lack the newer
-    columns, so merge footers first, then project to the declaration —
-    missing columns surface as typed NULLs, extra footer columns are
-    projected away. The manifest, not an arbitrary footer, is the
-    source of truth. Pre-schema manifests read footers as-is."""
+def _read_aligned(
+    spark: SparkSession, root: str, rel: list[str], m: dict
+) -> DataFrame:
+    """Read the manifest-relative files ``rel`` of ``root`` as the
+    manifest's DECLARED schema. The reader is given the declaration
+    rather than inferring one from footers, so building the frame
+    launches no Spark job. Part files written before an additive
+    evolution lack the newer columns, which the parquet reader fills
+    with typed NULLs; footer columns the declaration does not name are
+    never read. The manifest, not an arbitrary footer, is the source
+    of truth — every writer keeps file types equal to the declaration.
+    Pre-schema manifests read footers as-is."""
+    paths = [os.path.join(root, f) for f in rel]
     if "schema" not in m:
         return spark.read.parquet(*paths)
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+    return spark.read.schema(StructType.fromJson(m["schema"])).parquet(*paths)
 
-    declared = StructType.fromJson(m["schema"])
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    have = set(df.columns)
-    return df.select(
-        *[
-            F.col(f.name).cast(f.dataType)
-            if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in declared.fields
-        ]
-    )
+
+def _zone_overlaps(stat, lo, hi) -> bool:
+    """Whether a file (or chunk) whose zone map for a column is
+    ``stat`` can hold a value in ``[lo, hi]``; a None bound is open.
+    A bound prunes only when it and both ends of the stat are ``int``
+    (``bool`` is not an ``int`` here) or all ``str``: Spark coerces
+    mixed numeric types through double, and parquet float stats leave
+    NaN out, so any other comparison could skip a file holding a
+    match. A missing stat always may hold one."""
+    if stat is None:
+        return True
+    smin, smax = stat
+
+    def prunes(bound) -> bool:
+        return type(bound) in (int, str) and (
+            type(smin) is type(smax) is type(bound)
+        )
+
+    if prunes(lo) and smax < lo:
+        return False
+    if prunes(hi) and smin > hi:
+        return False
+    return True
 
 
 def version_as_of(root: str, ts: float) -> int:
@@ -601,30 +644,20 @@ def read_snapshot_pruned(
     driver does O(chunks + files-in-overlapping-chunks) work — the
     ``chunks_read``/``chunks_pruned`` info keys report it."""
 
-    def _overlaps(rng) -> bool:
-        if rng is None:
-            return True  # no stat → unprunable → must read
-        rmin, rmax = rng
-        if lo is not None and rmax < lo:
-            return False
-        if hi is not None and rmin > hi:
-            return False
-        return True
-
     m = read_manifest(root, version)
     keep: list[str] = []
     if "chunks" in m:
         files_total = manifest_n_files(m)
         chunks_read = 0
         for ch in m["chunks"]:
-            if not _overlaps((ch.get("ranges") or {}).get(col)):
+            if not _zone_overlaps((ch.get("ranges") or {}).get(col), lo, hi):
                 continue
             chunks_read += 1
             cd = _read_chunk(root, ch["path"])
             cstats = cd.get("stats", {})
             keep.extend(
                 f for f in cd["files"]
-                if _overlaps(cstats.get(f, {}).get(col))
+                if _zone_overlaps(cstats.get(f, {}).get(col), lo, hi)
             )
         info = {
             "files_total": files_total,
@@ -638,7 +671,7 @@ def read_snapshot_pruned(
         stats = m.get("stats", {})
         keep = [
             f for f in m["files"]
-            if _overlaps(stats.get(f, {}).get(col))
+            if _zone_overlaps(stats.get(f, {}).get(col), lo, hi)
         ]
         info = {
             "files_total": len(m["files"]),
@@ -649,9 +682,7 @@ def read_snapshot_pruned(
         # nothing overlaps: a correctly-typed empty frame
         df = read_snapshot(spark, root, m["version"]).limit(0)
     else:
-        df = _read_aligned(
-            spark, [os.path.join(root, f) for f in keep], m
-        )
+        df = _read_aligned(spark, root, keep, m)
     cond = F.lit(True)
     if lo is not None:
         cond = cond & (F.col(col) >= F.lit(lo))
@@ -671,6 +702,63 @@ def _uri_to_path(uri: str) -> str:
     return unquote(uri)
 
 
+def _merge_candidates(
+    rel: list[str], stats: dict, keys: list[str], bounds
+) -> list[str]:
+    """The files a merge source with per-key ``bounds`` (a row holding
+    ``_lo_<key>``/``_hi_<key>``) can match: those whose zone map admits
+    the source's range on EVERY key. A NULL bound means the source has
+    no row with that key set (it is empty or all-NULL there), and NULL
+    keys never equi-join, so no file is a candidate."""
+    rng = [(k, bounds[f"_lo_{k}"], bounds[f"_hi_{k}"]) for k in keys]
+    if any(lo is None for _, lo, _ in rng):
+        return []
+    return [
+        f for f in rel
+        if all(
+            _zone_overlaps(stats.get(f, {}).get(k), lo, hi)
+            for k, lo, hi in rng
+        )
+    ]
+
+
+_INT_RANK = {ByteType: 0, ShortType: 1, IntegerType: 2, LongType: 3}
+
+
+def _as_declared(name: str, have: DataType, want: DataType) -> Column:
+    """Source column ``name`` of type ``have`` as the declared type
+    ``want``, for a merge to write. Only exact conversions pass:
+    integral and float-to-double widening, and integral narrowing
+    guarded so a value out of the declared range fails the merge
+    instead of wrapping. Every other type difference (double to int
+    truncates, timestamp to date drops the time) raises
+    :class:`SchemaEvolutionError` before any file is read, as an
+    append with a changed type does."""
+    c = F.col(name)
+    if have == want:
+        return c
+    h, w = type(have), type(want)
+    if h in _INT_RANK and w in _INT_RANK:
+        if _INT_RANK[h] < _INT_RANK[w]:
+            return c.cast(want).alias(name)
+        top = 2 ** ((8 << _INT_RANK[w]) - 1) - 1
+        out_of_range = F.raise_error(
+            F.lit(f"merge source column {name!r} holds a value outside "
+                  f"declared {want.simpleString()!r}")
+        )
+        return (
+            F.when(~c.between(-top - 1, top), out_of_range)
+            .otherwise(c.cast(want))
+            .alias(name)
+        )
+    if (h, w) == (FloatType, DoubleType):
+        return c.cast(want).alias(name)
+    raise SchemaEvolutionError(
+        f"merge source column {name!r}: type {have.simpleString()!r} "
+        f"does not convert exactly to declared {want.simpleString()!r}"
+    )
+
+
 def merge_snapshot(
     spark: SparkSession,
     root: str,
@@ -688,51 +776,73 @@ def merge_snapshot(
     MATCHED AND NOT <pred> THEN INSERT`` gate), and remaining unmatched
     source rows insert when ``insert_unmatched``.
 
-    Scale shape: only data files that CONTAIN a matched key are
-    rewritten. The touched-file set comes from a key-only join against
+    Scale shape: one small aggregate computes the source's per-key
+    min/max, and only the files whose manifest zone maps overlap that
+    range on every key are scanned (``files_scanned``); every other
+    file is carried forward without being opened. Among the scanned
+    files, only those that CONTAIN a matched key are rewritten. The
+    touched-file set comes from a key-only join against
     ``input_file_name()`` — the exchange carries (key, path), never row
-    bodies — and is bounded by the file count, so at 100 TB a merge
-    touching 0.1% of keys rewrites ~0.1% of files while every other
-    manifest entry is carried forward verbatim (zero data movement).
-    Commit is the same O(files) atomic manifest as every other write;
-    a ``CommitConflict`` reruns the merge against the fresh head
-    (optimistic concurrency, staged files are re-derived because the
-    touched set may have changed).
+    bodies — so at 100 TB a merge over a clustered key range scans and
+    rewrites a handful of files while every other manifest entry is
+    carried forward verbatim (zero data movement). A file without a
+    zone map is always scanned, so a missing stat costs time, never
+    correctness. Commit is the same O(files) atomic manifest as every
+    other write; a ``CommitConflict`` reruns the merge against the
+    fresh head (optimistic concurrency, staged files are re-derived
+    because the touched set may have changed).
 
     The source may carry extra bookkeeping columns (a CDC ``_op``
     flag, change timestamps) — ``delete_predicate`` can reference
-    them, and written rows are projected to the TARGET's columns; a
-    source MISSING a target column fails loudly.
+    them, and written rows are projected to the TARGET's declared
+    columns and converted to its declared types, so merge-written
+    files always match the manifest. A source MISSING a target column
+    fails loudly, and so does a source type that does not convert
+    exactly (see ``_as_declared``).
 
     Returns ``{"version", "files_kept", "files_rewritten",
-    "n_files_new"}``.
+    "n_files_new", "files_scanned"}``.
     """
+    bounds = None
     for _ in range(max_retries):
         parent = current_version(root)
         m = read_manifest(root, parent)
         all_rel = manifest_files(root, m)
-        tgt = spark.read.parquet(
-            *[os.path.join(root, f) for f in all_rel]
+        tgt_schema = (
+            StructType.fromJson(m["schema"])
+            if "schema" in m
+            else _read_aligned(spark, root, all_rel, m).schema
         )
-        from pyspark.sql import functions as F
-
-        tgt_cols = tgt.columns
-        missing = [c for c in tgt_cols if c not in source.columns]
+        missing = [c for c in tgt_schema.names if c not in source.columns]
         if missing:
             raise ValueError(
                 f"merge source is missing target columns {missing}"
             )
-        src_keys = source.select(*keys).distinct()
-        touched_paths = {
-            os.path.realpath(_uri_to_path(r["_f"]))
-            for r in tgt.select(
-                *keys, F.input_file_name().alias("_f")
-            )
-            .join(src_keys, keys, "left_semi")
-            .select("_f")
-            .distinct()
-            .collect()
-        }
+        src_types = {f.name: f.dataType for f in source.schema}
+        written = [
+            _as_declared(f.name, src_types[f.name], f.dataType)
+            for f in tgt_schema
+        ]
+        src_keys = source.select(*keys)
+        if bounds is None:
+            bounds = source.agg(
+                *[F.min(k).alias(f"_lo_{k}") for k in keys],
+                *[F.max(k).alias(f"_hi_{k}") for k in keys],
+            ).collect()[0]
+        scan_rel = _merge_candidates(
+            all_rel, manifest_stats(root, m), keys, bounds
+        )
+        touched_paths = set()
+        if scan_rel:
+            touched_paths = {
+                os.path.realpath(_uri_to_path(r["_f"]))
+                for r in _read_aligned(spark, root, scan_rel, m)
+                .select(*keys, F.input_file_name().alias("_f"))
+                .join(src_keys, keys, "left_semi")
+                .select("_f")
+                .distinct()
+                .collect()
+            }
         manifest_by_real = {
             os.path.realpath(os.path.join(root, f)): f for f in all_rel
         }
@@ -750,30 +860,26 @@ def merge_snapshot(
                 f"(+{max(0, len(unresolved) - 3)} more); refusing to "
                 "continue — proceeding would duplicate matched keys"
             )
-        kept_rel = [
-            f for f in all_rel
-            if os.path.realpath(os.path.join(root, f)) not in touched_paths
-        ]
-        touched_rel = [f for f in all_rel if f not in set(kept_rel)]
+        touched = {manifest_by_real[p] for p in touched_paths}
+        kept_rel = [f for f in all_rel if f not in touched]
+        touched_rel = [f for f in all_rel if f in touched]
         src_live = (
             source.filter(~F.expr(delete_predicate))
             if delete_predicate
             else source
-        ).select(*tgt_cols)
+        ).select(*written)
         if touched_rel:
-            touched_rows = spark.read.parquet(
-                *[os.path.join(root, f) for f in touched_rel]
-            )
+            touched_rows = _read_aligned(spark, root, touched_rel, m)
             survivors = touched_rows.join(src_keys, keys, "left_anti")
-            matched_src = src_live.join(
-                touched_rows.select(*keys).distinct(), keys, "left_semi"
-            )
-            new_data = survivors.unionByName(matched_src)
+            # with inserts on, the source rows that match a touched key
+            # and those that do not add up to exactly src_live, so that
+            # side needs no join against the touched keys
             if insert_unmatched:
-                inserts = src_live.join(
-                    touched_rows.select(*keys).distinct(), keys, "left_anti"
+                new_data = survivors.unionByName(src_live)
+            else:
+                new_data = survivors.unionByName(
+                    src_live.join(touched_rows.select(*keys), keys, "left_semi")
                 )
-                new_data = new_data.unionByName(inserts)
         elif insert_unmatched:
             new_data = src_live
         else:
@@ -794,6 +900,7 @@ def merge_snapshot(
             "files_kept": len(kept_rel),
             "files_rewritten": len(touched_rel),
             "n_files_new": len(new_files),
+            "files_scanned": len(scan_rel),
         }
     raise CommitConflict(
         f"could not merge into {root} after {max_retries} attempts"
@@ -837,9 +944,7 @@ def read_increment(
     # align to to_version's declared schema: increments spanning an
     # additive evolution read older added files with typed NULLs in
     # the new columns, same as a full-snapshot read would
-    return _read_aligned(
-        spark, [os.path.join(root, f) for f in added], new_m
-    )
+    return _read_aligned(spark, root, added, new_m)
 
 
 def compact_snapshot(
@@ -859,19 +964,20 @@ def compact_snapshot(
     retries against the new head. Streaming snapshot sinks append one
     small commit per micro-batch; at 100 TB this is what keeps scan
     cost O(data), not O(commits)."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity import)
-
     for _ in range(max_retries):
         parent = current_version(root)
         m = read_manifest(root, parent)
-        paths = [
-            os.path.join(root, f) for f in manifest_files(root, m)
-        ]
+        rel = manifest_files(root, m)
         bytes_total = sum(
-            os.path.getsize(p) for p in paths if os.path.exists(p)
+            os.path.getsize(p)
+            for p in (os.path.join(root, f) for f in rel)
+            if os.path.exists(p)
         )
         n_out = max(1, -(-bytes_total // target_file_bytes))
-        df = spark.read.parquet(*paths).repartition(int(n_out))
+        # the declared schema, not the first footer's: files written
+        # before an additive evolution would otherwise decide the
+        # column set and drop the newer columns' values
+        df = _read_aligned(spark, root, rel, m).repartition(int(n_out))
         if sort_within_by:
             df = df.sortWithinPartitions(*sort_within_by)
         new_files = stage_files(df, root)
@@ -881,7 +987,7 @@ def compact_snapshot(
             continue
         return {
             "version": version,
-            "files_before": len(paths),
+            "files_before": len(rel),
             "files_after": len(new_files),
             "bytes_total": bytes_total,
         }

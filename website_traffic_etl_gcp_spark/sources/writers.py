@@ -231,9 +231,13 @@ def write_audit_publish(
         if published:
             for _ in range(5):
                 try:
+                    # an overwrite declares what its files hold:
+                    # snapshot reads trust the declaration, and an
+                    # inherited one would hide or mistype columns
                     out["version"] = st._commit(
                         table_path, staged_files, "overwrite",
                         st.current_version(table_path),
+                        extra={"schema": df.schema.jsonValue()},
                     )
                     break
                 except st.CommitConflict:
